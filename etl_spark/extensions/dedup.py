@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_spark.registry import register
+from etl_spark.session import child_session, rebind
 from etl_spark.tables import load, load_parallel
 
 # 60-bit integer from the first 15 hex chars of md5 — reproducible in
@@ -608,27 +609,30 @@ def connected_components(
     recovers the current round from storage instead of recomputing the
     whole label history.
 
-    Round structure (r16, guide §1.4/§2.2/§2.4 — kills the per-round
-    FIXED cost that made the family anti-scale with core count):
+    Round structure (guide §1.4/§2.2/§2.4 — no per-round FIXED cost
+    that grows with core count):
 
-    - the edge list is hash-partitioned by ``dst`` ONCE into
-      ``n_parts`` partitions sized from the measured edge count
-      (never from the core count) and cached; every round's label
-      table comes out of its MIN-aggregate hash-partitioned by
-      ``doc_id`` with the same ``n_parts`` (checkpoint preserves the
-      physical partitioning), so the per-round join is co-partitioned
-      — ONE exchange per round (the aggregate's), however many cores.
-    - AQE is disabled INSIDE the loop (restored in the finally): the
-      plan is fully determined by the pinned partition count, so
-      adaptive re-planning would only add per-stage scheduling
-      latency — at sf0.1 that fixed latency, not data, dominated the
-      loop (0.45–0.9 s/round on ~10.7k pairs, 8c/32c ratio 0.34).
-      The upstream pair pipeline still materializes under the
-      caller's AQE (the count job below runs BEFORE the scope).
+    - the loop runs on a child session (``session.child_session``)
+      with AQE off and ``shuffle.partitions=n_parts``, ``n_parts``
+      sized from the measured edge count (never from the core count).
+      The plan is fully determined by that count, so adaptive
+      re-planning would only add per-stage latency. The caller's
+      session confs are never written: queries running beside this
+      one on the same session keep their own AQE and partitioning.
+    - the edge list, persisted and counted under the CALLER's confs
+      (the upstream pair pipeline wants AQE's broadcast/skew
+      handling), is rebound onto the child, hash-partitioned by
+      ``dst`` ONCE and cached; every round's label table comes out of
+      its MIN-aggregate hash-partitioned by ``doc_id`` with the same
+      ``n_parts`` (checkpoint preserves the physical partitioning), so
+      the per-round join is co-partitioned — ONE exchange per round
+      (the aggregate's), however many cores.
     - the convergence label-sum rides the round's own materializing
       action as an ``observe()`` metric over a noop sink (guide
       §1.4) instead of a separate aggregate subtree — one job per
       round with no extra exchange to a 1-row partition.
+    - the returned labels are rebound onto the caller's session, so
+      downstream plans run under the caller's confs.
     """
     from pyspark.sql import Observation
 
@@ -700,24 +704,21 @@ def connected_components(
     n_edges = edges_raw.count()
     n_parts = max(1, -(-(n_edges * _CC_EDGE_BYTES) // _CC_TARGET_PART_BYTES))
 
-    _SCOPED = {
-        "spark.sql.adaptive.enabled": "false",
-        "spark.sql.shuffle.partitions": str(n_parts),
-    }
-    prior_conf: dict[str, str | None] = {}
-    for k in _SCOPED:
-        try:
-            prior_conf[k] = spark.conf.get(k)
-        except Exception:  # pragma: no cover - host-specific
-            prior_conf[k] = None
     edges = None
     try:
-        for k, v in _SCOPED.items():
-            spark.conf.set(k, v)
+        loop = child_session(
+            spark,
+            {
+                "spark.sql.adaptive.enabled": "false",
+                "spark.sql.shuffle.partitions": str(n_parts),
+            },
+        )
         # loop-invariant hoist (guide §2.4): partition edges by the
         # join key ONCE; every round then reuses the cached layout
         # instead of re-shuffling the edge list per round
-        edges = edges_raw.repartition(n_parts, "dst").persist()
+        edges = (
+            rebind(edges_raw, loop).repartition(n_parts, "dst").persist()
+        )
 
         def _round(df: DataFrame):
             """Materialize one round (checkpoint-backed) and return
@@ -760,15 +761,6 @@ def connected_components(
                 break
             prev_sum = cur_sum
     finally:
-        # restore the caller's confs even if a round raises (ADVICE
-        # r15): the returned labels are already materialized, so
-        # downstream consumers plan under the caller's session state.
-        for k, v in prior_conf.items():
-            if v is not None:
-                try:
-                    spark.conf.set(k, v)
-                except Exception:  # pragma: no cover - host-specific
-                    pass
         edges_raw.unpersist()  # no-op if already unpersisted above
         if edges is not None:
             edges.unpersist()
@@ -778,7 +770,7 @@ def connected_components(
         # persisted — they back the returned labels frame.
         if checkpoint_dir is not None and prior_dir is not None:
             sc.setCheckpointDir(prior_dir)
-    return labels
+    return rebind(labels, spark)
 
 
 def _duck_bands() -> str:

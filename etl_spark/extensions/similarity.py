@@ -16,7 +16,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_spark.registry import ADVISORY_COALESCE, register
+from etl_spark.registry import register
 from etl_spark.tables import load, load_parallel, scan_parquet
 
 # dot(a, b) over DOUBLE with a strict left-to-right fold — the same
@@ -427,9 +427,6 @@ def _duck_x24_pairs() -> str:
     "x24_blocked_neardup",
     oracle=_duck_x24_pairs(),
     tags=("similarity", "dedup"),
-    # bucket-bounded pair shuffles -> advisory-size AQE coalescing
-    # (r16 guide §2.2; interleaved A/B 0.91 at 32c, rows identical)
-    session_confs=ADVISORY_COALESCE,
 )
 def x24_blocked_neardup(spark: SparkSession, sf: str) -> DataFrame:
     """THE default embedding near-dup operator (x07's all-pairs form is

@@ -50,7 +50,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from etl_spark.registry import ADVISORY_COALESCE, register
+from etl_spark.registry import register
 from etl_spark.tables import load
 
 K_SKETCH = 256  # sketch size: rel. std err ~ 1/sqrt(K-2) ~ 6%
@@ -137,10 +137,6 @@ _DUCK_EST = (
         GROUP BY order_year
     """,
     tags=("sketch",),
-    # sketch-sized reduce sides -> advisory-size AQE coalescing
-    # (registry.ADVISORY_COALESCE; r16 guide §2.2 — interleaved A/B
-    # ≤1.0 at 32c, bounded state at any scale)
-    session_confs=ADVISORY_COALESCE,
 )
 def x76_kmv_distinct_customers(spark: SparkSession, sf: str) -> DataFrame:
     """KMV distinct-customer count per order-year (K=256).
@@ -468,10 +464,6 @@ def _make_hh_candidates(phi: float):
         HAVING CAST(count(*) AS DOUBLE) > {HH_PHI} * n
     """,
     tags=("sketch",),
-    # sketch-sized reduce sides -> advisory-size AQE coalescing
-    # (registry.ADVISORY_COALESCE; r16 guide §2.2 — interleaved A/B
-    # ≤1.0 at 32c, bounded state at any scale)
-    session_confs=ADVISORY_COALESCE,
 )
 def x79_token_heavy_hitters(spark: SparkSession, sf: str) -> DataFrame:
     """Corpus-wide heavy-hitter tokens (freq > HH_PHI) with EXACT
@@ -602,10 +594,6 @@ _Q_EXPR = f"w / ((CAST(h AS DOUBLE) + 1.0) / {HASH_DOMAIN:.1f})"
         FROM exact e LEFT JOIN est s USING (l_returnflag)
     """,
     tags=("sketch",),
-    # sketch-sized reduce sides -> advisory-size AQE coalescing
-    # (registry.ADVISORY_COALESCE; r16 guide §2.2 — interleaved A/B
-    # ≤1.0 at 32c, bounded state at any scale)
-    session_confs=ADVISORY_COALESCE,
 )
 def x80_priority_sample_revenue(spark: SparkSession, sf: str) -> DataFrame:
     """Per-returnflag revenue estimated from ONE K_PRIORITY-row
@@ -788,10 +776,6 @@ def cms_estimates(cells: DataFrame, vocab: DataFrame) -> DataFrame:
         FROM exact e JOIN est m USING (token)
     """,
     tags=("sketch",),
-    # sketch-sized reduce sides -> advisory-size AQE coalescing
-    # (registry.ADVISORY_COALESCE; r16 guide §2.2 — interleaved A/B
-    # ≤1.0 at 32c, bounded state at any scale)
-    session_confs=ADVISORY_COALESCE,
 )
 def x81_countmin_token_freq(spark: SparkSession, sf: str) -> DataFrame:
     """Count-min sketch audit: every corpus token's CMS estimate next
@@ -831,10 +815,6 @@ def x81_countmin_token_freq(spark: SparkSession, sf: str) -> DataFrame:
         SELECT token, est_cnt FROM est
     """,
     tags=("sketch",),
-    # sketch-sized reduce sides -> advisory-size AQE coalescing
-    # (registry.ADVISORY_COALESCE; r16 guide §2.2 — interleaved A/B
-    # ≤1.0 at 32c, bounded state at any scale)
-    session_confs=ADVISORY_COALESCE,
 )
 def x82_cms_merge_estimates(spark: SparkSession, sf: str) -> DataFrame:
     """CMS mergeability, proven cross-engine: the Spark side builds

@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_spark.extensions.sketches import _TOKENS_DUCK, _TOKENS_SPARK
-from etl_spark.registry import ADVISORY_COALESCE, register
+from etl_spark.registry import register
 from etl_spark.tables import load, scan_parquet
 
 # fixed demo query for the registered/oracle-checked form: three
@@ -93,10 +93,6 @@ def boolean_search(post: DataFrame, tokens: tuple[str, ...], mode: str = "and") 
         HAVING count(*) = 3
     """,
     tags=("text", "index"),
-    # sketch-sized reduce sides -> advisory-size AQE coalescing
-    # (registry.ADVISORY_COALESCE; r16 guide §2.2 — interleaved A/B
-    # ≤1.0 at 32c, bounded state at any scale)
-    session_confs=ADVISORY_COALESCE,
 )
 def x83_boolean_token_search(spark: SparkSession, sf: str) -> DataFrame:
     """AND-of-three boolean search over the corpus: doc_ids containing

@@ -112,15 +112,20 @@ def compact_table(
 
             from etl_spark.sources.zonemap import zorder_column
 
-            packed = (
-                df.withColumn("__zv", zorder_column(df, cluster_by))
-                .repartitionByRange(n_out, F.col("__zv"))
-                .sortWithinPartitions("__zv")
-                .drop("__zv")
-            )
+            def layout(staged):
+                return (
+                    staged.withColumn("__zv", zorder_column(staged, cluster_by))
+                    .repartitionByRange(n_out, F.col("__zv"))
+                    .sortWithinPartitions("__zv")
+                    .drop("__zv")
+                )
+
         else:
-            packed = df.repartition(n_out)
-        _overwrite_self(packed, table)
+
+            def layout(staged):
+                return staged.repartition(n_out)
+
+        _overwrite_self(df, table, layout)
         after = sum(len(v) for v in file_inventory(spark, table).values())
         return {
             "partitions_compacted": 1,

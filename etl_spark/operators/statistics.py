@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from etl_spark.registry import ADVISORY_COALESCE, register
+from etl_spark.registry import register
 from etl_spark.tables import load
 
 
@@ -174,10 +174,6 @@ def e06_value_k_correlation(spark: SparkSession, sf: str) -> DataFrame:
     """,
     tags=("statistics", "timeseries"),
     doc="Per-nation OLS revenue trend: exact fixed-point normal equations, one double division.",
-    # sketch-sized reduce sides -> advisory-size AQE coalescing
-    # (registry.ADVISORY_COALESCE; r16 guide §2.2 — interleaved A/B
-    # ≤1.0 at 32c, bounded state at any scale)
-    session_confs=ADVISORY_COALESCE,
 )
 def x108_revenue_trend(spark: SparkSession, sf: str) -> DataFrame:
     """Per-nation revenue TREND — the least-squares slope of monthly

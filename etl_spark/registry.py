@@ -17,6 +17,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from etl_spark.session import pin_confs
+
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 # Runtime session confs every registered query's semantics depend on.
@@ -27,69 +29,26 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 # (VERDICT r10 "What's wrong" #1). Timezone-aware expressions resolve
 # the session TZ at ANALYSIS time (Catalyst's ResolveTimeZone rule), so
 # pinning immediately before the callable constructs its DataFrame is
-# sufficient and sticks through the driver's later collect(). Both keys
-# are runtime-settable. ANSI is pinned to the Spark 4.x default the
-# whole suite is developed and tested under, so cast/overflow/dividing
-# semantics cannot drift with the host session either.
+# sufficient and sticks through the caller's later collect(). ANSI is
+# pinned to the Spark 4.x default the whole suite is developed and
+# tested under, so cast/overflow/dividing semantics cannot drift with
+# the host session either. These are the only confs a registered query
+# sets on its caller's session: partitioning is written into each
+# query's plan, and work that needs other confs runs on a child session
+# (session.child_session).
 _SESSION_PINS: dict[str, str] = {
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.ansi.enabled": "true",
-    # AQE partition-coalescing mode: the session default (true =
-    # maximize parallelism) is re-pinned per query because a few
-    # operators deliberately run under false (honor advisory partition
-    # size — the Spark-docs-recommended production mode) for
-    # shuffle-count-dominated plans: the CC fixpoint scopes+restores
-    # it itself (dedup.connected_components), and x85's unrolled
-    # 3-round PageRank pins it for its own collect (r15 optimization,
-    # guide §2.2 fewer/larger reduce partitions; measured interleaved
-    # A/B 0.72–0.91 ratio on x85, results identical). This pin is what
-    # guarantees the next query always starts from the default.
-    "spark.sql.adaptive.coalescePartitions.parallelismFirst": "true",
 }
 
 
-# Per-query override for shuffle-COUNT-dominated plans (guide §2.2
-# "fewer, larger reduce partitions"): honor
-# advisoryPartitionSizeInBytes instead of spreading every tiny shuffle
-# across all cores as sliver partitions. This is the Spark-docs-
-# recommended production mode, so it is the 100 TB-correct setting for
-# queries whose reduce sides are SKETCH-sized (KMV registers, CMS
-# rows, bottom-k heaps, posting aggregates) — bounded state that never
-# grows with the corpus. PERF_r15 measured those queries running
-# 1.7–3.7x FASTER at 8 cores than 32 under the default
-# (parallelismFirst=true): per-core task overhead exceeded their
-# compute. The override must stick through the driver's collect() on
-# the returned lazy frame, so it is applied at query ENTRY and the
-# next registered query's _SESSION_PINS restores the default — the
-# exact x85 mechanism (r15), now shared.
-ADVISORY_COALESCE: dict[str, str] = {
-    "spark.sql.adaptive.coalescePartitions.parallelismFirst": "false",
-}
-
-
-def _pin_session(
-    fn: QueryFn, session_confs: dict[str, str] | None = None
-) -> QueryFn:
-    """Wrap a query fn so every invocation re-pins the session confs
-    in ``_SESSION_PINS`` (plus the spec's per-query ``session_confs``
-    overrides, applied after) on the caller-supplied session."""
+def _pin_session(fn: QueryFn) -> QueryFn:
+    """Wrap a query fn so every invocation pins ``_SESSION_PINS`` on
+    the caller-supplied session before building its DataFrame."""
 
     @functools.wraps(fn)
     def run(spark: SparkSession, sf: str) -> DataFrame:
-        pins = (
-            {**_SESSION_PINS, **session_confs}
-            if session_confs
-            else _SESSION_PINS
-        )
-        for k, v in pins.items():
-            # defensive: the keys are runtime-settable on stock Spark,
-            # but if a host session ever rejects one, degrade to the
-            # un-pinned (r10) behavior for that key rather than failing
-            # every registered query on the set() itself
-            try:
-                spark.conf.set(k, v)
-            except Exception:  # pragma: no cover - host-specific
-                pass
+        pin_confs(spark, _SESSION_PINS)
         return fn(spark, sf)
 
     return run
@@ -112,19 +71,17 @@ def register(
     oracle: str | None = None,
     tags: tuple[str, ...] = (),
     doc: str = "",
-    session_confs: dict[str, str] | None = None,
 ) -> Callable[[QueryFn], QueryFn]:
     """Decorator: register a query under ``name``.
 
-    SIDE EFFECT (ADVICE r11): the registered callable is wrapped by
-    ``_pin_session``, so EVERY invocation sets ``_SESSION_PINS``
+    SIDE EFFECT: the registered callable is wrapped by
+    ``_pin_session``, so every invocation sets ``_SESSION_PINS``
     (session timeZone=UTC, ansi.enabled=true) on the caller-supplied
-    SparkSession and deliberately does NOT restore the previous
-    values — the pin must stick through the driver's later
-    ``collect()`` on the returned (lazy) DataFrame, and a restore
-    before that collect would re-break the r10 TZ class. Hosts that
-    need different session semantics for unrelated work should
-    re-set those confs after consuming the result.
+    SparkSession and does not restore the previous values — the pin
+    must still hold when the caller later collects the returned lazy
+    DataFrame. No other session conf is written by a registered query.
+    Hosts that need a different timezone or ANSI mode for unrelated
+    work should re-set those two confs after consuming the result.
     """
 
     def deco(fn: QueryFn) -> QueryFn:
@@ -132,7 +89,7 @@ def register(
             raise ValueError(f"duplicate query name {name!r}")
         _REGISTRY[name] = QuerySpec(
             name=name,
-            fn=_pin_session(fn, session_confs),
+            fn=_pin_session(fn),
             oracle=oracle,
             tags=tuple(tags),
             doc=doc or (fn.__doc__ or ""),
@@ -190,67 +147,62 @@ def _ensure_loaded() -> None:
 # never occupy a slot (their rows-only check is a permanent weak
 # signal — burning a hard-signal slot on them is waste, r5 lesson).
 #
-# Round-15 window (tools/rotate_window.py output + VERDICT r14 #1):
-#   the ENTIRE 46-query r10-stale cohort (x72/x48 lead as the r14
-#   runners-up, then the media/curation/warehouse/graph/event rows,
-#   oldest-first in registration order) plus the round's new
-#   registrations, which are never-driver-checked and lead per policy
-#   rule 1 (they displace the 4 r11-stale dedup heads that pad the
-#   tail until the new queries land). After this round nothing
-#   registered is last-green before r11 (VERDICT r14 #1's done bar).
+# Current window: ``python tools/rotate_window.py`` output — the 40
+# queries last green in r11, then the oldest-registered 10 of the r12
+# cohort. The round after continues with the deferred r12 rows.
 _DRIVER_WINDOW_PRIORITY: tuple[str, ...] = (
-    # -- last green r10 (the r15 rotation cohort, registration order)
-    "x72_incremental_knn_join",
-    "x48_quality_gate_agreement",
-    "x107_bigram_pmi",
-    "x15_media_decode",
-    "x95_image_neardup",
-    "x104_image_dup_clusters",
-    "x101_incremental_image_neardup",
-    "x99_media_resize",
-    "x100_frame_stats",
-    "x16_binary_meta",
-    "x25_decontaminate",
-    "x45_split_token_budget",
-    "x47_curated_corpus",
-    "x49_multimodal_curated",
-    "x50_segment_dedup",
-    "x51_temperature_mix_sample",
-    "x52_training_order",
-    "x54_lm_quality_score",
-    "x55_split_leakage",
-    "x114_bitmap_distinct",
-    "x116_rolling_distinct",
-    "x106_bm25_search",
-    "x115_triangle_clustering",
-    "x117_bfs_levels",
-    "a07_rollup",
-    "a08_count_distinct",
-    "j08_range_join",
-    "f10_explode_unnest",
-    "w05_ntile_quartiles",
-    "w06_trailing_window",
-    "x96_cohort_ltv",
-    "x97_inventory_aging",
-    "x98_abc_pareto",
-    "x102_new_vs_returning",
-    "x103_interpurchase_gaps",
-    "x105_ship_sla_monthly",
-    "x118_peak_active_orders",
-    "e10_weekly_retention",
-    "e11_windowed_conversion",
-    "e12_time_to_convert",
-    "e14_dau_wau_stickiness",
-    "x108_revenue_trend",
-    "x110_corr_matrix",
-    "x112_mad_outliers",
-    "x119_price_histogram",
-    "x120_weighted_percentiles",
-    # -- r15 registrations (never driver-checked, policy rule 1)
-    "x141_skip_scan",
-    "x142_inventory_turns",
-    "x143_backlog_aging",
-    "x144_supplier_leadtime",
+    # -- last green r11
+    "x01_dedup_exact",
+    "x02_ngram_jaccard_pairs",
+    "x03_minhash_signatures",
+    "x04_minhash_lsh_pairs",
+    "x05_simhash",
+    "x23_jaccard_capped_pairs",
+    "x37_incremental_neardup",
+    "x38_minhash_error",
+    "x69_cluster_size_histogram",
+    "x57_semdedup",
+    "x60_modal_agreement",
+    "x73_pq_adc_topk",
+    "x14_bow_clusters",
+    "x17_quality_filter",
+    "x18_tfidf_top_terms",
+    "x19_corpus_stats",
+    "x20_bpe_token_count",
+    "x31_quality_percentile_gate",
+    "x32_length_histogram",
+    "x33_word_freq_zipf",
+    "x34_bigram_counts",
+    "a09_pivot",
+    "a10_unpivot",
+    "a11_grouping_sets",
+    "q08_market_share",
+    "q13_customer_distribution",
+    "q15_top_supplier",
+    "q16_supplier_cnt",
+    "q17_small_quantity_revenue",
+    "q20_promo_shippers",
+    "x124_otif_fill_rate",
+    "x125_priority_mix_shift",
+    "x126_sla_histogram_percentiles",
+    "p02_like_contains",
+    "j07_anti",
+    "set02_except",
+    "q03_shipping_priority",
+    "q14_promo_effect",
+    "j10_salted_skew_join",
+    "j11_salted_hotkeys_join",
+    # -- last green r12
+    "x29_dup_clusters",
+    "x24_blocked_neardup",
+    "x39_kmeans_assign",
+    "x42_neardup_bucket_audit",
+    "x43_embedding_norm_stats",
+    "x128_ivfpq_delta_probe",
+    "x35_type_token_ratio",
+    "x26_repetition_stats",
+    "x27_hash_sample",
+    "x28_sequence_pack",
 )
 # Queries whose SEMANTICS changed this round and therefore justify a
 # window slot even though their last driver row is recent (the r5
@@ -266,9 +218,10 @@ REVERIFY_THIS_ROUND: frozenset[str] = frozenset(
 
 
 def all_specs() -> dict[str, QuerySpec]:
-    """All registered specs, driver-window order. Note each spec's
-    ``fn`` pins ``_SESSION_PINS`` on the session it is called with and
-    does not restore prior values (see ``register``)."""
+    """All registered specs, ``_DRIVER_WINDOW_PRIORITY`` first. Each
+    spec's ``fn`` pins the session timezone and ANSI mode
+    (``_SESSION_PINS``) on the session it is called with and leaves
+    every other conf as it found it (see ``register``)."""
     _ensure_loaded()
     # A typo'd or renamed entry would silently fall out of the window
     # instead of pinning it — fail loudly instead (ADVICE r3).

@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # Session-wide defaults. Rationale per key:
 #  - adaptive.*: AQE re-plans at runtime (coalesces small shuffle
@@ -57,3 +57,61 @@ def get_spark(
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+# The engine writes session confs in exactly two places, both below.
+# Queries, alerts and the scheduler share one SparkSession, so a conf
+# an engine call sets on it changes every query that runs beside it.
+# Partitioning therefore lives in the plans (explicit counts, hints);
+# a conf is written only when it must hold at analysis time
+# (``pin_confs``) or for work confined to a child session
+# (``child_session``).
+
+
+def pin_confs(spark: SparkSession, confs: dict[str, str]) -> None:
+    """Set ``confs`` on ``spark`` and leave them set.
+
+    Only for confs that Catalyst resolves at ANALYSIS time and that
+    must therefore still hold when the caller later collects a lazy
+    frame: the session timeZone and ANSI mode (the registry pins the
+    values every query is tested under) and
+    ``spark.sql.legacy.parquet.nanosAsLong`` (the events readers'
+    int64-nanos scan). Values are idempotent per key, so concurrent
+    callers pinning the same value cannot disturb each other."""
+    for k, v in confs.items():
+        # a host session that rejects a key degrades to unpinned
+        # behaviour for that key rather than failing the caller
+        try:
+            spark.conf.set(k, v)
+        except Exception:  # pragma: no cover - host-specific
+            pass
+
+
+def child_session(spark: SparkSession, confs: dict[str, str]) -> SparkSession:
+    """A ``spark.newSession()`` carrying the caller's runtime SQL
+    confs and current database, with ``confs`` on top.
+
+    The child shares the SparkContext, the cache and the catalog, so
+    persisted frames, checkpoints and tables are visible both ways;
+    only its conf and temp-view namespace are its own. Work that needs
+    a conf the caller must not see (AQE off in the CC fixpoint,
+    dynamic partition overwrite for ``insertInto``) runs on the child,
+    and the caller's session is never written."""
+    child = spark.newSession()
+    inherited = {
+        k: v for k, v in spark.conf.getAll.items() if spark.conf.isModifiable(k)
+    }
+    for k, v in {**inherited, **confs}.items():
+        child.conf.set(k, v)
+    child.catalog.setCurrentDatabase(spark.catalog.currentDatabase())
+    return child
+
+
+def rebind(df: DataFrame, session: SparkSession) -> DataFrame:
+    """``df``'s analyzed plan as a frame of ``session``: it is then
+    optimized, planned and executed under ``session``'s confs. Cached
+    and checkpointed subtrees stay shared, since the cache is."""
+    jdf = session._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+        session._jsparkSession, df._jdf.logicalPlan()
+    )
+    return DataFrame(jdf, session)

@@ -24,6 +24,7 @@ tools/quiet_bench_r15_skip.py.
 from __future__ import annotations
 
 import hashlib
+import json
 import os
 import tempfile
 
@@ -53,37 +54,41 @@ def _layout_root(sf: str) -> str:
     return os.path.join(tempfile.gettempdir(), f"etl_spark_skip_{tag}")
 
 
+def _live_marker(root: str) -> dict | None:
+    """The live generation's marker, or None when the layout is
+    unbuilt, crashed mid-build, or predates generation directories."""
+    try:
+        with open(os.path.join(root, "_LAYOUT_OK")) as fh:
+            marker = json.load(fh)
+    except (OSError, ValueError):
+        return None
+    if isinstance(marker, dict) and {"gen", "build_sec"} <= marker.keys():
+        return marker
+    return None
+
+
 def ensure_skip_layout(spark: SparkSession, sf: str) -> tuple[str, str, str]:
     """Build (once per fixture generation) and return the z-ordered
     layout + its two file-skipping indexes:
-    (table_path, bloom_index_path, zonemap_path). The marker file is
-    written LAST, so a crashed build rebuilds from scratch."""
-    root = _layout_root(sf)
-    table = os.path.join(root, "orders_z")
-    bloom = os.path.join(root, "bloom_idx")
-    zmap = os.path.join(root, "zonemap")
-    marker = os.path.join(root, "_LAYOUT_OK")
-    # pre-r16 markers hold the bare string "ok" (no build_sec); treat
-    # them as unbuilt ONCE so the rebuild records the cost the bench
-    # must disclose (VERDICT r15 #8) — the marker path is mtime-keyed
-    # per fixture generation, so this is a one-time migration
-    rebuild = True
-    if os.path.exists(marker):
-        import json as _json
+    (table_path, bloom_index_path, zonemap_path).
 
-        try:
-            with open(marker) as fh:
-                rebuild = "build_sec" not in _json.load(fh)
-        except Exception:
-            rebuild = True
-    if rebuild:
-        import json
-        import shutil
+    A build goes into a fresh generation directory beside the live
+    one, and the marker naming the live generation is swapped in LAST
+    by renaming it over the old marker. The live layout is never
+    deleted or rewritten, so a reader holding it keeps reading it
+    during and after a rebuild, and two processes building at once
+    each finish on their own generation. A crashed build never reaches the
+    swap: the previous layout stays live, or, if there was none, the
+    next call builds again. The indexes store absolute file paths,
+    which is why generations are never moved."""
+    root = _layout_root(sf)
+    marker = _live_marker(root)
+    if marker is None:
         import time
 
-        shutil.rmtree(root, ignore_errors=True)
         os.makedirs(root, exist_ok=True)
-
+        gen = tempfile.mkdtemp(prefix="gen-", dir=root)
+        table = os.path.join(gen, "orders_z")
         t0 = time.perf_counter()
         orders = load(spark, sf, "orders")
         write_zordered(
@@ -92,33 +97,40 @@ def ensure_skip_layout(spark: SparkSession, sf: str) -> tuple[str, str, str]:
         )
         # m sized for the per-file row counts the sf fixtures produce
         # (<=40k rows/file at sf0.1) at ~1% fpp
-        write_bloom_index(spark, table, ["o_custkey"], bloom, m_bits=1 << 19)
-        write_zonemap(spark, table, ["o_custkey", "o_totalprice"], zmap)
-        with open(marker, "w") as fh:
-            # build cost is recorded so the bench can DISCLOSE it
-            # (VERDICT r15 #8): x141's row times the pruned scans only
-            # — layout+index build is declared maintenance, paid once
-            # per fixture generation, reported via skip_stats
-            json.dump(
-                {"ok": True,
-                 "build_sec": round(time.perf_counter() - t0, 3)},
-                fh,
-            )
-    return table, bloom, zmap
+        write_bloom_index(
+            spark, table, ["o_custkey"], os.path.join(gen, "bloom_idx"),
+            m_bits=1 << 19,
+        )
+        write_zonemap(
+            spark, table, ["o_custkey", "o_totalprice"],
+            os.path.join(gen, "zonemap"),
+        )
+        # build cost is recorded so the bench can DISCLOSE it
+        # (VERDICT r15 #8): x141's row times the pruned scans only
+        # — layout+index build is declared maintenance, paid once
+        # per fixture generation, reported via skip_stats
+        marker = {
+            "gen": os.path.basename(gen),
+            "build_sec": round(time.perf_counter() - t0, 3),
+        }
+        staged = os.path.join(gen, "_LAYOUT_OK")
+        with open(staged, "w") as fh:
+            json.dump(marker, fh)
+        os.replace(staged, os.path.join(root, "_LAYOUT_OK"))
+    gen = os.path.join(root, marker["gen"])
+    return (
+        os.path.join(gen, "orders_z"),
+        os.path.join(gen, "bloom_idx"),
+        os.path.join(gen, "zonemap"),
+    )
 
 
 def layout_build_sec(sf: str) -> float | None:
     """The one-time z-order+index build cost recorded by
     ``ensure_skip_layout`` for this fixture generation (None when the
-    layout predates the marker format or is unbuilt)."""
-    import json
-
-    marker = os.path.join(_layout_root(sf), "_LAYOUT_OK")
-    try:
-        with open(marker) as fh:
-            return json.load(fh).get("build_sec")
-    except Exception:
-        return None
+    layout is unbuilt)."""
+    marker = _live_marker(_layout_root(sf))
+    return None if marker is None else marker["build_sec"]
 
 
 def _path_agg(df: DataFrame, kind: str) -> DataFrame:

@@ -25,9 +25,11 @@ the same catalog.
 
 from __future__ import annotations
 
-import contextlib
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+
+from etl_spark.session import child_session, rebind
 
 
 def ensure_table(df: DataFrame, table: str) -> bool:
@@ -114,26 +116,13 @@ def truncate_load(df: DataFrame, table: str) -> None:
     spark.catalog.refreshTable(table)
 
 
-@contextlib.contextmanager
-def _dynamic_overwrite(spark: SparkSession):
-    """Set partitionOverwriteMode=dynamic for ONE write and RESTORE
-    the previous value (the corpus.py `_with_overwrite_mode` rule).
-    Leaving 'dynamic' set poisoned every later partitioned overwrite
-    in the session — r9 finding: dynamic-mode jobs also skip the
-    ``_SUCCESS`` marker, so a later ``ivf_index_append`` delta looked
-    forever-uncommitted and streamed index refreshes silently
-    retrieved nothing (caught by the full-suite run of
-    test_streaming_knn_probe_admit_refreshes_index)."""
-    key = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, "dynamic")
-    try:
-        yield
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
+# Dynamic partition overwrite for ``insertInto``, which takes no
+# per-write overwrite-mode option, so the two writes below run on a
+# child session (session.child_session). Setting the mode on the
+# caller's session would leak it into every later partitioned
+# overwrite: dynamic-mode jobs skip the ``_SUCCESS`` marker, so an
+# ``ivf_index_append`` delta would look forever uncommitted.
+_DYNAMIC_OVERWRITE = {"spark.sql.sources.partitionOverwriteMode": "dynamic"}
 
 
 def partitioned_save(
@@ -164,15 +153,17 @@ def partitioned_save(
     to the repartition."""
     spark = df.sparkSession
     df = df.repartition(*partition_cols)
-    with _dynamic_overwrite(spark):
-        if spark.catalog.tableExists(table):
-            df.select(*spark.table(table).columns).write.insertInto(
-                table, overwrite=(mode == "overwrite")
-            )
-        else:
-            df.write.format("parquet").mode(mode).partitionBy(
-                *partition_cols
-            ).saveAsTable(table)
+    if spark.catalog.tableExists(table):
+        aligned = rebind(
+            df.select(*spark.table(table).columns),
+            child_session(spark, _DYNAMIC_OVERWRITE),
+        )
+        aligned.write.insertInto(table, overwrite=(mode == "overwrite"))
+        spark.catalog.refreshTable(table)
+    else:
+        df.write.format("parquet").mode(mode).partitionBy(
+            *partition_cols
+        ).saveAsTable(table)
 
 
 def bucketed_save(
@@ -422,12 +413,22 @@ def _bucket_spec(spark: SparkSession, table: str) -> tuple[int, list[str], list[
     return int(n), cols(rows.get("Bucket Columns")), cols(rows.get("Sort Columns"))
 
 
-def _overwrite_self(df: DataFrame, table: str) -> None:
+def _overwrite_self(
+    df: DataFrame,
+    table: str,
+    layout: Callable[[DataFrame], DataFrame] | None = None,
+) -> None:
     """Overwrite ``table`` with a plan that reads from it: stage the
     rows into a temp table, then overwrite from the staged copy —
     PRESERVING the table's bucketing/sort layout (a plain overwrite
     would silently drop the bucket spec, and with it every
     zero-shuffle join downstream).
+
+    ``layout`` shapes the FINAL write's partitions (one output file
+    per partition). It is applied to the staged copy, not to ``df``:
+    the scan of the staged copy packs small files into shared splits
+    and cuts big ones, so a file layout written into the staging
+    table does not survive the second hop.
 
     On Delta/Iceberg this whole helper disappears (native DML with
     snapshot isolation); parquet managed tables need the staging hop
@@ -438,7 +439,10 @@ def _overwrite_self(df: DataFrame, table: str) -> None:
     staging = _staging_name(table)
     df.write.format("parquet").mode("overwrite").saveAsTable(staging)
     try:
-        writer = spark.table(staging).write.format("parquet").mode("overwrite")
+        staged = spark.table(staging)
+        if layout is not None:
+            staged = layout(staged)
+        writer = staged.write.format("parquet").mode("overwrite")
         if n_buckets:
             writer = writer.bucketBy(n_buckets, *bucket_cols)
             if sort_cols:
@@ -476,10 +480,10 @@ def _overwrite_partitions(
         # written by one task (no small-files explosion), then align
         # columns positionally for insertInto
         cols = spark.table(table).columns
-        with _dynamic_overwrite(spark):
-            staged.repartition(*pcols).select(*cols).write.insertInto(
-                table, overwrite=True
-            )
+        rebind(
+            staged.repartition(*pcols).select(*cols),
+            child_session(spark, _DYNAMIC_OVERWRITE),
+        ).write.insertInto(table, overwrite=True)
         remaining = {
             tuple(r) for r in staged.select(*pcols).distinct().collect()
         }

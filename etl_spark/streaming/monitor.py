@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from etl_spark.alerting import Notifier, evaluate_condition
+from etl_spark.session import pin_confs
 
 # the driver fixture's current events schema (ts: naive timestamp[us])
 EVENTS_DDL = (
@@ -77,7 +78,7 @@ def stream_events(spark: SparkSession, path: str, schema: str | None = None) -> 
         (f for f in StructType.fromDDL(schema).fields if f.name == "ts"), None
     )
     if ts_field is not None and isinstance(ts_field.dataType, LongType):
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        pin_confs(spark, {"spark.sql.legacy.parquet.nanosAsLong": "true"})
         raw = spark.readStream.schema(schema).parquet(path)
         return raw.withColumn(
             "ts",

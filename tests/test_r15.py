@@ -106,6 +106,44 @@ def test_x141_layout_actually_skips_files(spark, sf_dir):
     assert len(kept_z) <= total_z // 2, (len(kept_z), total_z)
 
 
+def test_skip_layout_rebuild_keeps_held_layout_readable(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A reader holding the live skip layout keeps reading it while a
+    rebuild runs and after the new generation is swapped in: the
+    rebuild goes into a fresh directory, never over the live one."""
+    import shutil
+    import tempfile
+
+    from etl_spark.sources import skipquery
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    shutil.copy(f"{sf_dir}/orders.parquet", sf / "orders.parquet")
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    table, _, _ = skipquery.ensure_skip_layout(spark, str(sf))
+    held = spark.read.parquet(table)
+    n = held.count()
+    # a marker from an older layout format forces the rebuild
+    root = skipquery._layout_root(str(sf))
+    with open(f"{root}/_LAYOUT_OK", "w") as fh:
+        fh.write('"ok"')
+
+    mid_build: list[int] = []
+    write_zordered = skipquery.write_zordered
+
+    def build(*args, **kwargs):
+        mid_build.append(held.count())
+        return write_zordered(*args, **kwargs)
+
+    monkeypatch.setattr(skipquery, "write_zordered", build)
+    new_table, _, _ = skipquery.ensure_skip_layout(spark, str(sf))
+    assert mid_build == [n]
+    assert held.count() == n
+    assert spark.read.parquet(new_table).count() == n
+    assert skipquery.ensure_skip_layout(spark, str(sf))[0] == new_table
+
+
 def test_x143_backlog_counts_exactly_the_open_orders(spark, sf_dir):
     """Partition check: the aging buckets sum to exactly the O/P
     order count, every bucket is nonnegative, and finalized orders

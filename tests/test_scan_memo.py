@@ -14,7 +14,8 @@ import shutil
 
 import pytest
 
-from etl_spark.tables import _SCAN_CACHE, load
+from etl_spark import tables
+from etl_spark.tables import _SCAN_CACHE, load, scan_parquet
 
 
 def _copy_fixture(sf_dir, dst, name="nation"):
@@ -112,3 +113,59 @@ def test_memo_bounded_one_entry_per_path(spark, sf_dir, tmp_path):
     load(spark, str(d), "nation")
     path = f"{d}/nation.parquet"
     assert sum(1 for k in _SCAN_CACHE if k[1] == path) == 1
+
+
+def test_memo_evicts_least_recently_used(spark, tmp_path, monkeypatch):
+    # a full memo evicts the entry read longest ago, not the one
+    # inserted first: a hot table read on every query stays resident
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    monkeypatch.setattr(tables, "_SCAN_CACHE", {})
+    paths = []
+    for i in range(tables._SCAN_CACHE_MAX + 1):
+        p = str(tmp_path / f"t{i}.parquet")
+        pq.write_table(pa.table({"x": pa.array([i], pa.int64())}), p)
+        paths.append(p)
+    first = scan_parquet(spark, paths[0])
+    for p in paths[1:-1]:
+        scan_parquet(spark, p)
+    assert len(tables._SCAN_CACHE) == tables._SCAN_CACHE_MAX
+    assert scan_parquet(spark, paths[0]) is first  # hit: now most recent
+    scan_parquet(spark, paths[-1])  # one more key evicts one entry
+    assert any(k[1] == paths[0] for k in tables._SCAN_CACHE)
+    assert not any(k[1] == paths[1] for k in tables._SCAN_CACHE)
+    assert scan_parquet(spark, paths[0]) is first
+
+
+def test_memo_survives_concurrent_get_and_put(monkeypatch):
+    # queries on one session run on several threads; the memo's
+    # move-to-end on hit and eviction on put must not race
+    import sys
+    import threading
+
+    monkeypatch.setattr(tables, "_SCAN_CACHE", {})
+    errors: list[BaseException] = []
+
+    def worker(w: int) -> None:
+        try:
+            for i in range(3000):
+                key = ("s", f"p{(w * 7 + i) % 90}", i % 3, "")
+                if tables._memo_get(key) is None:
+                    tables._memo_put(key, object())
+        except BaseException as e:  # surfaced by the main thread
+            errors.append(e)
+
+    prior = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker, args=(w,)) for w in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(prior)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors[:3]
+    assert len(tables._SCAN_CACHE) <= tables._SCAN_CACHE_MAX
